@@ -1849,30 +1849,40 @@ def simhash_pairs(docs_with_sig: DataFrame, max_hamming: int = 3, band_bits: int
 COS_MIN = 0.40
 
 
-def dot(a: Column, b: Column) -> Column:
-    """Dot product of two float arrays in double (JVM higher-order
-    functions; no UDF)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+# dot/norm/cosine are single parsed SQL expressions: building cosine
+# takes 3 py4j round trips, where the F.aggregate/F.zip_with lambda form
+# took 295. The Catalyst tree is the lambda form's (double casts per
+# element, a 0D seed, left-fold order), so values are bit-identical
+# (pinned by tests/test_construction_cost.py).
+def _dot_sql(a: str, b: str) -> str:
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+        "0D, (acc, x) -> acc + x)"
     )
 
 
-def norm(a: Column) -> Column:
-    """L2 norm of a float array in double."""
-    return F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double"))
-    )
+def _norm_sql(a: str) -> str:
+    return f"sqrt(aggregate({a}, 0D, (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
 
 
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity of two float arrays, computed in double (JVM
-    higher-order functions; no UDF). For pairwise workloads prefer
-    precomputing `norm()` per row BEFORE the join (see
-    embedding_cosine_block_exact below) — this form re-walks both
-    arrays three times per pair."""
-    return dot(a, b) / (norm(a) * norm(b))
+def dot(a: str, b: str) -> Column:
+    """Dot product, in double, of the float-array columns named ``a``
+    and ``b`` (JVM higher-order functions; no UDF)."""
+    return F.expr(_dot_sql(a, b))
+
+
+def norm(a: str) -> Column:
+    """L2 norm, in double, of the float-array column named ``a``."""
+    return F.expr(_norm_sql(a))
+
+
+def cosine(a: str, b: str) -> Column:
+    """Cosine similarity of the float-array columns named ``a`` and
+    ``b``, computed in double as dot(a, b) / (norm(a) * norm(b)). For
+    pairwise workloads prefer precomputing `norm()` per row BEFORE the
+    join (see embedding_cosine_block_exact below) — this form re-walks
+    both arrays three times per pair."""
+    return F.expr(f"{_dot_sql(a, b)} / ({_norm_sql(a)} * {_norm_sql(b)})")
 
 
 def embedding_cosine_block_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1887,7 +1897,7 @@ def embedding_cosine_block_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # norms are computed once per ROW before the join (2N array walks),
     # not once per PAIR after it (2·N² walks); the arithmetic
     # dot/(na·nb) is unchanged so results stay bit-identical.
-    e = t["embeddings"].withColumn("nrm", norm(F.col("embedding")))
+    e = t["embeddings"].withColumn("nrm", norm("embedding"))
     a = e.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("emb_a"),
                  F.col("nrm").alias("norm_a"), "label")
     b = e.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("emb_b"),
@@ -1897,7 +1907,7 @@ def embedding_cosine_block_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("vec_a") < F.col("vec_b"))
         .withColumn(
             "cos_sim",
-            F.round(dot(F.col("emb_a"), F.col("emb_b")) / (F.col("norm_a") * F.col("norm_b")), 6),
+            F.round(dot("emb_a", "emb_b") / (F.col("norm_a") * F.col("norm_b")), 6),
         )
         .filter(F.col("cos_sim") >= COS_MIN)
         .select("vec_a", "vec_b", "cos_sim")

@@ -37,11 +37,19 @@ from disco_spark.dedup.dedup import (
     signature_groups,
 )
 from disco_spark.registry import query
-from disco_spark.session import lazy_persist, load_tables
+from disco_spark.session import (
+    lazy_persist,
+    load_tables,
+    read_store,
+    record_schemas,
+    store_is_current,
+    unstamp_store,
+)
 from disco_spark.textops.analysis import with_toks
 
 SIG_ROOT = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(
     os.path.abspath(__file__)))), "benchdata", "sig_store")
+_COMPONENTS = ("groups", "bands")
 
 
 def _store_manifest(docs: DataFrame, subset: str) -> dict:
@@ -64,7 +72,9 @@ def _store_manifest(docs: DataFrame, subset: str) -> dict:
             "band_cap": BAND_CAP,
             "hash_family": "md5-salted",  # minhash_signatures
         },
-        "version": 4,  # v4: signature-grouped reps + BAND_CAP bucket cap
+        # v4: signature-grouped reps + BAND_CAP bucket cap; v5:
+        # schemas.json record
+        "version": 5,
     }
 
 
@@ -77,17 +87,19 @@ def signature_store_save(docs: DataFrame, path: str, subset: str = "all") -> Non
     corpus, then only these ~100-byte rows live on; text is not
     stored. The cap is computed over the corpus alone — the store is
     built before any batch exists, so the chain cannot depend on what
-    arrives later (the oracle replays exactly this per-side cap)."""
+    arrives later (the oracle replays exactly this per-side cap). The
+    schema record and then the manifest are written last and removed
+    first, so a build killed mid-write is rebuilt, never served."""
+    unstamp_store(path)
     grouped = signature_groups(
         minhash_from_toks(with_toks(docs))
     ).persist()
-    grouped.select("doc_id", "rep").write.mode("overwrite").parquet(
-        os.path.join(path, "groups")
-    )
-    rep_band_keys(grouped).write.mode("overwrite").parquet(
-        os.path.join(path, "bands")
-    )
+    groups = grouped.select("doc_id", "rep")
+    bands = rep_band_keys(grouped)
+    groups.write.mode("overwrite").parquet(os.path.join(path, "groups"))
+    bands.write.mode("overwrite").parquet(os.path.join(path, "bands"))
     grouped.unpersist()
+    record_schemas(path, {"groups": groups, "bands": bands})
     with open(os.path.join(path, "manifest.json"), "w") as fh:
         json.dump(_store_manifest(docs, subset), fh)
 
@@ -97,14 +109,8 @@ def ensure_signature_store(
 ) -> bool:
     """Build the store unless a manifest-matching one exists. Returns
     True when a build ran (test hook)."""
-    mf = os.path.join(path, "manifest.json")
-    want = _store_manifest(docs, subset)
-    try:
-        with open(mf) as fh:
-            if json.load(fh) == want:
-                return False
-    except (OSError, ValueError):
-        pass
+    if store_is_current(path, _store_manifest(docs, subset), _COMPONENTS):
+        return False
     signature_store_save(docs, path, subset)
     return True
 
@@ -119,10 +125,11 @@ def dedup_against_store(
     a scan of the band table. The rep join is bounded per bucket
     (≤BAND_CAP a side); the expansions are linear equi-joins — exact,
     because identical signatures collide on identical band keys."""
-    store_bands = spark.read.parquet(os.path.join(path, "bands")).select(
+    store = read_store(spark, path, _COMPONENTS)
+    store_bands = store["bands"].select(
         F.col("doc_id").alias("c_rep"), "band_idx", "band_key"
     )
-    store_groups = spark.read.parquet(os.path.join(path, "groups")).select(
+    store_groups = store["groups"].select(
         F.col("doc_id").alias("corpus_doc"), F.col("rep").alias("c_rep")
     )
     in_grouped = lazy_persist(

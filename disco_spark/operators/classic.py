@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from disco_spark.functions.library import kvify
+from disco_spark.session import default_parallelism
 
 OUT_BATCH = 10_000
 COMBINER_FLUSH_EVERY = 100_000
@@ -256,7 +257,7 @@ class DiscoJob:
             # here means "can't estimate", and the safe fallback is to leave
             # the input untouched (never inject a full shuffle of an input
             # of unknown size).
-            target = spark.sparkContext.defaultParallelism
+            target = default_parallelism(spark)
             est_bytes = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
             max_split = _parse_bytes(
                 spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")

@@ -10,15 +10,21 @@ the same scale-oriented defaults:
   static ``nr_reduces`` knob (reference: lib/disco/worker/classic/worker.py:227-296).
 - Arrow on for every Python<->JVM boundary (pandas UDFs are the only
   sanctioned Python hot path).
-- shuffle.partitions sized for local[32] test runs; on a real cluster
-  AQE's coalescing makes the initial number mostly a ceiling.
+- shuffle.partitions is a fixed ceiling for batch shuffles: AQE
+  coalesces each exchange to what its bytes need, so the initial count
+  does not have to follow the cores. Streams are the exception: a
+  stateful stream pins its state-store count at start and AQE never
+  coalesces it, so ``streaming.windows.run_stream_to_memory`` sizes it
+  from ``default_parallelism`` instead.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import SparkSession
+from pyspark.sql.types import StructType
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -109,6 +115,9 @@ def _normalize_event_ts(df):
 # footer reads + schema inference) was a fixed tax on EVERY registered
 # query, and the driver/bench run dozens per session against one sf_dir.
 _TABLE_CACHE: dict[tuple[str, str], dict] = {}
+# The same reads before _normalize_event_ts, same key: the file schemas a
+# file stream over a table must declare (table_file_schema).
+_FILE_READS: dict[tuple[str, str], dict] = {}
 
 # Last sf_dir whose views were registered, per live session (weak: dead
 # sessions drop out). Re-registering 10 identical temp views cost ~65 ms
@@ -127,10 +136,12 @@ def invalidate_table_cache(sf_dir: str | None = None) -> None:
     captured at first read). ``None`` clears everything."""
     if sf_dir is None:
         _TABLE_CACHE.clear()
+        _FILE_READS.clear()
         return
     target = os.path.abspath(sf_dir)
     for key in [k for k in _TABLE_CACHE if k[1] == target]:
         _TABLE_CACHE.pop(key, None)
+        _FILE_READS.pop(key, None)
 
 
 def scratch_dir(name: str, sf_dir: str) -> str:
@@ -166,6 +177,75 @@ def file_fingerprints(files: list[str]) -> list:
         except OSError:
             out.append([f, None, None])
     return out
+
+
+# A persisted store (ANN index, k-NN graph, planted cells, signature
+# store) records the schema of every parquet component it writes, after
+# the data and before its manifest. Opening a component with the
+# recorded schema skips the footer-merge job a schema-less
+# spark.read.parquet runs: the DiscoDB contract, where a built index
+# costs nothing to open. A store without a record is rebuilt, never
+# opened by inference.
+SCHEMA_RECORD = "schemas.json"
+
+
+def record_schemas(path: str, components: dict) -> None:
+    """Record the schemas of ``{component: DataFrame}`` for the store at
+    ``path``."""
+    with open(os.path.join(path, SCHEMA_RECORD), "w") as fh:
+        json.dump({c: df.schema.jsonValue() for c, df in components.items()}, fh)
+
+
+def unstamp_store(path: str) -> None:
+    """Remove the store's manifest and schema record before a rebuild
+    writes into ``path`` in place: a build killed mid-write then leaves a
+    store that store_is_current rejects, instead of old stamps beside
+    half-written data."""
+    for stamp in ("manifest.json", SCHEMA_RECORD):
+        try:
+            os.remove(os.path.join(path, stamp))
+        except FileNotFoundError:
+            pass
+
+
+def _recorded_schemas(path: str, components) -> dict | None:
+    """``{component: StructType}`` from the store's record, or None when
+    the record is missing, unreadable or lacks one of ``components``."""
+    try:
+        with open(os.path.join(path, SCHEMA_RECORD)) as fh:
+            rec = json.load(fh)
+        return {c: StructType.fromJson(rec[c]) for c in components}
+    except (OSError, ValueError, KeyError, TypeError):
+        return None
+
+
+def store_is_current(path: str, want: dict, components) -> bool:
+    """True when the store at ``path`` may be served: its manifest equals
+    ``want``, every component directory exists, and its schema record
+    covers them. Anything else means rebuild — a matching manifest alone
+    is not a serveable store (a crash can leave it beside missing data)."""
+    try:
+        with open(os.path.join(path, "manifest.json")) as fh:
+            if json.load(fh) != want:
+                return False
+    except (OSError, ValueError):
+        return False
+    return (
+        all(os.path.isdir(os.path.join(path, c)) for c in components)
+        and _recorded_schemas(path, components) is not None
+    )
+
+
+def read_store(spark: SparkSession, path: str, components) -> dict:
+    """``{component: DataFrame}`` over ``<path>/<component>``, each read
+    with its recorded schema; FileNotFoundError when the store has no
+    record for them (rebuild it — there is no inference fallback)."""
+    rec = _recorded_schemas(path, components)
+    if rec is None:
+        raise FileNotFoundError(f"store {path!r} has no schema record; rebuild it")
+    return {
+        c: spark.read.schema(rec[c]).parquet(os.path.join(path, c)) for c in components
+    }
 
 
 def default_parallelism(spark: SparkSession, fallback: int = 32) -> int:
@@ -237,11 +317,11 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, "object"]:
                 _LAST_VIEWS[spark] = key[1]
             return dict(cached)
         _TABLE_CACHE.pop(key, None)
-    out = {}
+    out, reads = {}, {}
     for name in TABLES:
         path = os.path.join(sf_dir, f"{name}.parquet")
         if os.path.exists(path):
-            df = spark.read.parquet(path)
+            df = reads[name] = spark.read.parquet(path)
             if name == "events":
                 df = _normalize_event_ts(df)
             df.createOrReplaceTempView(name)
@@ -252,5 +332,16 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, "object"]:
             f"(expected <table>.parquet for {', '.join(TABLES)})"
         )
     _TABLE_CACHE[key] = dict(out)
+    _FILE_READS[key] = reads
     _LAST_VIEWS[spark] = key[1]
     return out
+
+
+def table_file_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """Schema of ``<sf_dir>/<name>.parquet`` as its files store it —
+    events.ts still raw, before load_tables normalizes it — which is what
+    a file stream over the table must declare. It comes from the read
+    load_tables caches, so it runs no footer-inference job of its own."""
+    load_tables(spark, sf_dir)
+    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
+    return _FILE_READS[key][name].schema

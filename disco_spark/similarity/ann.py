@@ -56,7 +56,7 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-row norms before the pair join (cosine() inside the join would
     # re-walk both arrays per pair); dot/(nq·ne) keeps the exact
     # arithmetic of cosine(q_emb, embedding), so values are bit-stable.
-    e = t["embeddings"].withColumn("nrm", norm(F.col("embedding")))
+    e = t["embeddings"].withColumn("nrm", norm("embedding"))
     q = e.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
@@ -67,7 +67,7 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn(
             "cos_sim",
             F.round(
-                dot(F.col("q_emb"), F.col("embedding")) / (F.col("q_nrm") * F.col("nrm")), 6
+                dot("q_emb", "embedding") / (F.col("q_nrm") * F.col("nrm")), 6
             ),
         )
         .select("query_id", F.col("vec_id").alias("neighbor_id"), "cos_sim")
@@ -129,24 +129,24 @@ def ann_ivf_search(
     # identically — same robustness idiom as the scored stage)
     qc = (
         queries.crossJoin(F.broadcast(cents))
-        .withColumn("c_sim", F.round(cosine(F.col("q_emb"), F.col("centroid")), 6))
+        .withColumn("c_sim", F.round(cosine("q_emb", "centroid"), 6))
     )
     wc = Window.partitionBy("query_id").orderBy(F.desc("c_sim"), F.asc("label"))
     probe = (
         qc.withColumn("rn", F.row_number().over(wc))
         .filter(F.col("rn") <= nprobe)
-        .select("query_id", "q_emb", norm(F.col("q_emb")).alias("q_nrm"), "label")
+        .select("query_id", "q_emb", norm("q_emb").alias("q_nrm"), "label")
     )
     # partition-pruned scan of the probed cells only; norms precomputed
     # per row, not per pair
     scored = (
-        e.withColumn("nrm", norm(F.col("embedding")))
+        e.withColumn("nrm", norm("embedding"))
         .join(F.broadcast(probe), "label")
         .filter(F.col("vec_id") != F.col("query_id"))
         .withColumn(
             "cos_sim",
             F.round(
-                dot(F.col("q_emb"), F.col("embedding")) / (F.col("q_nrm") * F.col("nrm")), 6
+                dot("q_emb", "embedding") / (F.col("q_nrm") * F.col("nrm")), 6
             ),
         )
     )
@@ -493,9 +493,12 @@ GRAPH_ROOT = os.path.join(
 def _adaptive_knn(
     spark: SparkSession, sf_dir: str, k: int = TOP_K, nprobe: int = 4
 ) -> DataFrame:
-    import json
-
-    from disco_spark.session import file_fingerprints, lazy_persist
+    from disco_spark.session import (
+        file_fingerprints,
+        lazy_persist,
+        read_store,
+        store_is_current,
+    )
 
     t = load_tables(spark, sf_dir)
     e = t["embeddings"]
@@ -510,15 +513,10 @@ def _adaptive_knn(
         "k": k,
         "nprobe": nprobe,
         "algo": "adaptive-sqrt-cells-lloyd1-v1",
+        "version": 2,  # v2: schemas.json record
     }
-    try:
-        with open(mf) as fh:
-            # manifest match alone is not a serveable store (the
-            # ensure_index lesson): the graph dir must exist too
-            if json.load(fh) == want and os.path.isdir(gdir):
-                return spark.read.parquet(gdir)
-    except (OSError, ValueError):
-        pass
+    if store_is_current(store, want, ["graph"]):
+        return read_store(spark, store, ["graph"])["graph"]
 
     cells = adaptive_cells(e)
     # persist the assignment: knn_graph references its input in three
@@ -556,7 +554,8 @@ def _swap_into_store(
       names are never reused, so leftovers accumulate otherwise); an
       age guard keeps a concurrent LIVE builder's in-progress scratch
       safe;
-    - the manifest is written ONLY when our data made it into place: a
+    - the schema record and then the manifest are written ONLY when our
+      data made it into place (session.record_schemas): a
       losing builder stamping the winner's data with its own ``want``
       would mislabel the store whenever the two builders fingerprinted
       DIFFERENT inputs (dataset regenerated between their reads) — the
@@ -567,6 +566,8 @@ def _swap_into_store(
     import json
     import shutil
     import time as _time
+
+    from disco_spark.session import record_schemas
 
     for stale in _glob.glob(f"{data_dir}_building_*") + _glob.glob(
         f"{data_dir}_old_*"
@@ -596,9 +597,12 @@ def _swap_into_store(
         shutil.rmtree(tmp, ignore_errors=True)
     shutil.rmtree(old, ignore_errors=True)
     if renamed:
+        record_schemas(os.path.dirname(data_dir), {os.path.basename(data_dir): df})
         with open(mf, "w") as fh:
             json.dump(want, fh)
-    return spark.read.parquet(data_dir)
+    # the schema of what we wrote: the store is deterministic, so it is
+    # also the schema of a concurrent build's copy that won the rename
+    return spark.read.schema(df.schema).parquet(data_dir)
 
 
 @query(
@@ -735,7 +739,7 @@ def _exact_topk_pairs(e: DataFrame, n_queries: int) -> DataFrame:
     by ann_recall_audit and ann_nprobe_calibration. Probe set
     broadcast; per-row norms precomputed; deterministic tie-break
     (ROUND(cos,6) DESC, id ASC) on both engines."""
-    e = e.withColumn("nrm", norm(F.col("embedding")))
+    e = e.withColumn("nrm", norm("embedding"))
     q = e.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
@@ -746,7 +750,7 @@ def _exact_topk_pairs(e: DataFrame, n_queries: int) -> DataFrame:
         .withColumn(
             "cos_sim",
             F.round(
-                dot(F.col("q_emb"), F.col("embedding"))
+                dot("q_emb", "embedding")
                 / (F.col("q_nrm") * F.col("nrm")),
                 6,
             ),
@@ -916,7 +920,7 @@ def ann_nprobe_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
     )
     qc = q.crossJoin(F.broadcast(cents)).withColumn(
-        "c_sim", F.round(cosine(F.col("q_emb"), F.col("centroid")), 6)
+        "c_sim", F.round(cosine("q_emb", "centroid"), 6)
     )
     wc = Window.partitionBy("query_id").orderBy(F.desc("c_sim"), F.asc("label"))
     ranks = (
@@ -1015,9 +1019,7 @@ def planted_cells_store(
     manifest: an interrupted rebuild can never leave a matching
     manifest next to a partial cells dir, and concurrent builders
     never clobber each other's write)."""
-    import json
-
-    from disco_spark.session import file_fingerprints
+    from disco_spark.session import file_fingerprints, read_store, store_is_current
 
     path = os.path.join(
         PLANTED_CELLS_ROOT, os.path.basename(os.path.normpath(sf_dir))
@@ -1030,13 +1032,10 @@ def planted_cells_store(
         "dim": PLANTED_DIM,
         "jitter": PLANTED_JITTER,
         "algo": "adaptive-sqrt-cells-lloyd1-v1",
+        "version": 2,  # v2: schemas.json record
     }
-    try:
-        with open(mf) as fh:
-            if json.load(fh) == want and os.path.isdir(cdir):
-                return spark.read.parquet(cdir)
-    except (OSError, ValueError):
-        pass
+    if store_is_current(path, want, ["cells"]):
+        return read_store(spark, path, ["cells"])["cells"]
     return _swap_into_store(spark, adaptive_cells(planted), cdir, mf, want)
 
 

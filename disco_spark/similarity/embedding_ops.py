@@ -39,7 +39,7 @@ def embedding_l2_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "label",
         F.size("embedding").alias("dim"),
-        F.round(norm(F.col("embedding")), 6).alias("l2_norm"),
+        F.round(norm("embedding"), 6).alias("l2_norm"),
     )
 
 

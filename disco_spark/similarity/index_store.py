@@ -11,7 +11,8 @@ The index is three parquet tables under one directory:
 
 plus a ``manifest.json`` recording the input files and training params,
 so a changed corpus invalidates the index instead of silently serving
-stale cells.
+stale cells, and a ``schemas.json`` recording each table's schema, so
+opening the index reads no parquet footers and runs no Spark job.
 
 Scale story: at 100 TB the build pass (train + encode + centroid agg)
 runs once; every subsequent query reads ONLY the probed cells' codes
@@ -35,7 +36,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from disco_spark.registry import query
-from disco_spark.session import file_fingerprints, load_tables
+from disco_spark.session import (
+    file_fingerprints,
+    load_tables,
+    read_store,
+    record_schemas,
+    store_is_current,
+    unstamp_store,
+)
 from disco_spark.similarity.ann import N_QUERIES, TOP_K, ivf_centroids
 from disco_spark.similarity.pq import (
     IVFPQ_ORACLE,
@@ -59,6 +67,11 @@ INDEX_ROOT = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(
 # and training cache — see session.file_fingerprints (mtime_ns).
 _file_fingerprints = file_fingerprints
 
+# the build's tables, each opened with its recorded schema
+_COMPONENTS = ("centroids", "codes", "codebooks")
+# ann_index_delete's write: one bigint column per tombstoned id
+_TOMBSTONE_SCHEMA = "vec_id bigint"
+
 
 def _manifest(e: DataFrame, m: int, ksub: int, subset: str = "all") -> dict:
     return {
@@ -80,17 +93,27 @@ def _manifest(e: DataFrame, m: int, ksub: int, subset: str = "all") -> dict:
         },
         # bump only for changes the params above can't express (v2:
         # decimal-mean centroids + rounded probe keys; v3: stat
-        # fingerprints+subset; v4: mtime_ns + explicit params)
-        "version": 4,
+        # fingerprints+subset; v4: mtime_ns + explicit params; v5:
+        # schemas.json record)
+        "version": 5,
     }
+
+
+def _encoded(e: DataFrame, books: np.ndarray) -> DataFrame:
+    """(vec_id, codes, label): the one writer of base codes and delta
+    batches, so the recorded codes schema also reads every delta."""
+    return pq_encode(e, books).join(e.select("vec_id", "label"), "vec_id")
 
 
 def ann_index_save(e: DataFrame, path: str, subset: str = "all") -> None:
     """Build the full IVF-PQ index from (vec_id, embedding, label) rows
     and persist it under ``path``. One distributed encode pass + one
     centroid agg; codebook training is the bounded driver-side sample
-    pass (pq_train docstring)."""
+    pass (pq_train docstring). The schema record and then the manifest
+    are written last and removed first, so a build killed mid-write
+    leaves a store that ensure_index rebuilds instead of serving."""
     spark = e.sparkSession
+    unstamp_store(path)
     # a rebuild orphans any delta batches: their codes were assigned
     # under the OLD codebooks and would ADC-score as garbage against
     # the new LUTs — drop them with the old index. Tombstones likewise:
@@ -100,7 +123,7 @@ def ann_index_save(e: DataFrame, path: str, subset: str = "all") -> None:
     shutil.rmtree(os.path.join(path, "tombstones"), ignore_errors=True)
     books = pq_train(e)
     m, ksub, dsub = books.shape
-    codes = pq_encode(e, books).join(e.select("vec_id", "label"), "vec_id")
+    codes = _encoded(e, books)
     cents = ivf_centroids(e)
     # label-partitioned codes: at scale a probe prunes to nprobe
     # directories instead of scanning every code file.
@@ -113,9 +136,11 @@ def ann_index_save(e: DataFrame, path: str, subset: str = "all") -> None:
         for j in range(m)
         for c in range(ksub)
     ]
-    spark.createDataFrame(
+    codebooks = spark.createDataFrame(
         book_rows, "subspace int, code int, centroid array<double>"
-    ).write.mode("overwrite").parquet(os.path.join(path, "codebooks"))
+    )
+    codebooks.write.mode("overwrite").parquet(os.path.join(path, "codebooks"))
+    record_schemas(path, {"centroids": cents, "codes": codes, "codebooks": codebooks})
     with open(os.path.join(path, "manifest.json"), "w") as fh:
         json.dump(_manifest(e, m, ksub, subset), fh)
 
@@ -126,16 +151,17 @@ def ann_index_load(
     """Load a persisted index -> (centroids_df, codes_df, codebooks).
 
     Codebook doubles roundtrip parquet exactly (IEEE 754 binary), so
-    ADC scores from a loaded index are bit-identical to fresh ones."""
-    cents = spark.read.parquet(os.path.join(path, "centroids"))
-    codes = spark.read.parquet(os.path.join(path, "codes")).select(
+    ADC scores from a loaded index are bit-identical to fresh ones.
+    Every table opens with its recorded schema; the one job is the
+    bounded codebook collect."""
+    parts = read_store(spark, path, _COMPONENTS)
+    cents = parts["centroids"]
+    codes = parts["codes"].select(
         "vec_id", "codes", F.col("label").cast("int").alias("label")
     )
-    rows = (
-        spark.read.parquet(os.path.join(path, "codebooks"))
-        .orderBy("subspace", "code")
-        .collect()  # bounded: m*ksub rows (16*64 = 1024), a few KB
-    )
+    # bounded: m*ksub rows (16*64 = 1024), a few KB; each row lands in
+    # books[subspace, code], so their order does not matter
+    rows = parts["codebooks"].collect()
     m = 1 + max(r.subspace for r in rows)
     ksub = 1 + max(r.code for r in rows)
     dsub = len(rows[0].centroid)
@@ -148,20 +174,11 @@ def ann_index_load(
 def ensure_index(e: DataFrame, path: str, subset: str = "all") -> bool:
     """Build the index at ``path`` unless a manifest-matching one exists.
     Returns True when a build ran (test hook)."""
-    mf = os.path.join(path, "manifest.json")
-    want = _manifest(e, M_SUBSPACES, K_SUB, subset)
-    try:
-        with open(mf) as fh:
-            # a matching manifest alone is not proof of a serveable
-            # store: a crash mid-compaction (or manual surgery) can
-            # leave the manifest intact with the codes dir missing —
-            # require both before skipping the rebuild
-            if json.load(fh) == want and os.path.isdir(
-                os.path.join(path, "codes")
-            ):
-                return False
-    except (OSError, ValueError):
-        pass
+    # a matching manifest alone is not proof of a serveable store: a
+    # crash mid-compaction (or manual surgery) can leave it intact with
+    # the codes dir or the schema record missing — both force a rebuild
+    if store_is_current(path, _manifest(e, M_SUBSPACES, K_SUB, subset), _COMPONENTS):
+        return False
     ann_index_save(e, path, subset)
     return True
 
@@ -185,10 +202,7 @@ def ann_index_add(
     full rebuild (ann_index_save) re-centers it."""
     if books is None:
         _, _, books = ann_index_load(e_new.sparkSession, path)
-    new_codes = pq_encode(e_new, books).join(
-        e_new.select("vec_id", "label"), "vec_id"
-    )
-    new_codes.write.partitionBy("label").mode("overwrite").parquet(
+    _encoded(e_new, books).write.partitionBy("label").mode("overwrite").parquet(
         os.path.join(path, "codes_delta", f"batch={batch_id}")
     )
 
@@ -197,11 +211,14 @@ def ann_index_load_all_codes(spark: SparkSession, path: str) -> DataFrame:
     """Base codes plus EVERY delta batch added after the build: reading
     the codes_delta root discovers batch=<id>/label=<l> partitions, so
     the union covers all batches (the pre-fix shape dropped batch N-1
-    when batch N landed)."""
-    base = spark.read.parquet(os.path.join(path, "codes"))
+    when batch N landed). Deltas share the base's writer (_encoded), so
+    the base's recorded schema reads them too."""
+    base = read_store(spark, path, ["codes"])["codes"]
     delta_dir = os.path.join(path, "codes_delta")
     if os.path.isdir(delta_dir) and any(os.scandir(delta_dir)):
-        delta = spark.read.parquet(delta_dir).select("vec_id", "codes", "label")
+        delta = spark.read.schema(base.schema).parquet(delta_dir).select(
+            "vec_id", "codes", "label"
+        )
         base = base.select("vec_id", "codes", "label").unionByName(delta)
     return base.select(
         "vec_id", "codes", F.col("label").cast("int").alias("label")
@@ -228,7 +245,7 @@ def ann_index_delete(
 def ann_index_tombstones(spark: SparkSession, path: str) -> DataFrame | None:
     tomb_dir = os.path.join(path, "tombstones")
     if os.path.isdir(tomb_dir) and any(os.scandir(tomb_dir)):
-        return spark.read.parquet(tomb_dir).select("vec_id")
+        return spark.read.schema(_TOMBSTONE_SCHEMA).parquet(tomb_dir).select("vec_id")
     return None
 
 
@@ -305,12 +322,10 @@ def streaming_index_add(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stage = tempfile.mkdtemp(prefix="ann_stream_src_")
     try:
-        e.filter(F.col("vec_id") % 2 == 1).repartition(3).write.mode(
-            "overwrite"
-        ).parquet(stage)
-        schema = spark.read.parquet(stage).schema
+        arrivals = e.filter(F.col("vec_id") % 2 == 1)
+        arrivals.repartition(3).write.mode("overwrite").parquet(stage)
         stream = (
-            spark.readStream.schema(schema)
+            spark.readStream.schema(arrivals.schema)
             .option("maxFilesPerTrigger", "1")
             .parquet(stage)
         )

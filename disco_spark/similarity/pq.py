@@ -208,7 +208,7 @@ def pq_search_rerank(
     cut the candidate set to ``shortlist`` per query (scanning codes, not
     vectors), then exact cosine runs only on those candidates — at scale
     the expensive float read touches O(queries * shortlist) rows."""
-    from disco_spark.dedup.dedup import dot, norm
+    from disco_spark.dedup.dedup import cosine
 
     cand = pq_search(codes_df, queries, codebooks, spark, k=shortlist)
     q = spark.createDataFrame(
@@ -220,11 +220,7 @@ def pq_search_rerank(
         .join(F.broadcast(q), F.col("query_id") == F.col("qid"))
         .withColumn(
             "cos_sim",
-            F.round(
-                dot(F.col("q_emb"), F.col("embedding"))
-                / (norm(F.col("q_emb")) * norm(F.col("embedding"))),
-                6,
-            ),
+            F.round(cosine("q_emb", "embedding"), 6),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
@@ -258,9 +254,8 @@ def ivfpq_search(
     the probed cells' codes. Pass ``cents`` to serve from a PERSISTED
     coarse quantizer (index_store.ann_index_load) instead of recomputing
     it from ``e`` — ``e`` is then only the rerank's raw-vector source."""
-    from disco_spark.dedup.dedup import dot, norm
-    from disco_spark.similarity.ann import ivf_centroids
     from disco_spark.dedup.dedup import cosine
+    from disco_spark.similarity.ann import ivf_centroids
 
     m, ksub, dsub = codebooks.shape
     if cents is None:
@@ -275,7 +270,7 @@ def ivfpq_search(
     wc = Window.partitionBy("query_id").orderBy(F.desc("c_sim"), F.asc("label"))
     probes = (
         q.crossJoin(F.broadcast(cents))
-        .withColumn("c_sim", F.round(cosine(F.col("q_emb"), F.col("centroid")), 6))
+        .withColumn("c_sim", F.round(cosine("q_emb", "centroid"), 6))
         .withColumn("rn", F.row_number().over(wc))
         .filter(F.col("rn") <= nprobe)
         .select("query_id", "q_emb", "lut", "label")
@@ -301,11 +296,7 @@ def ivfpq_search(
         cand.join(e.select(F.col("vec_id").alias("neighbor_id"), "embedding"), "neighbor_id")
         .withColumn(
             "cos_sim",
-            F.round(
-                dot(F.col("q_emb"), F.col("embedding"))
-                / (norm(F.col("q_emb")) * norm(F.col("embedding"))),
-                6,
-            ),
+            F.round(cosine("q_emb", "embedding"), 6),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))

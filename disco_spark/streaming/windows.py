@@ -13,9 +13,12 @@ availableNow trigger into a memory sink inside the query call.
 
 Scale notes: event-time windows + watermarks bound state (state store
 holds only open windows); dropDuplicatesWithinWatermark bounds the
-dedup state the same way. shuffle partitions size the state store
-parallelism — at 100 TB of events/day you'd set
-spark.sql.shuffle.partitions to O(cores) and checkpoint to object store.
+dedup state the same way. A stream fixes its state-store count at start
+and commits every store on every batch, and AQE never coalesces it, so
+run_stream_to_memory starts each stream with one store per core
+(session.default_parallelism) rather than the batch shuffle width. At
+100 TB of events/day the same rule holds — O(cores) stores, checkpointed
+to object store.
 """
 
 from __future__ import annotations
@@ -27,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from disco_spark.registry import query
-from disco_spark.session import load_tables
+from disco_spark.session import default_parallelism, load_tables, table_file_schema
 
 _TUMBLING_ORACLE = """
     SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS window_start,
@@ -163,21 +166,22 @@ def run_stream_to_memory(
     watermark: tuple[str, str] | None = ("ts", "1 hour"),
     source_file: str = "events.parquet",
     max_files_per_trigger: int | None = None,
-    state_partitions: int | None = None,
 ) -> DataFrame:
     """Execute a REAL Structured Streaming job over a testdata parquet:
     readStream -> transform -> memory sink, availableNow trigger (process
     everything, then stop). Returns the sink contents as a DataFrame.
     ``max_files_per_trigger`` splits availableNow processing into
     multiple micro-batches (replay tests use it to prove cross-batch
-    state behavior)."""
+    state behavior). The source schema is the file schema of the table
+    ``source_file`` names, from the read load_tables caches."""
     # events.parquet is TIMESTAMP(NANOS); a vanilla (driver) session can't
     # read it without this runtime conf (session.py invariant) — don't rely
     # on an earlier query having called load_tables in the same session.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    reader = spark.readStream.schema(
+        table_file_schema(spark, sf_dir, source_file.removesuffix(".parquet"))
+    )
     source_path = os.path.join(sf_dir, source_file)
-    batch_schema = spark.read.parquet(source_path).schema
-    reader = spark.readStream.schema(batch_schema)
     if os.path.isdir(source_path):
         # directory-shaped table (part-files inside <name>.parquet/):
         # stream the directory itself. A pathGlobFilter of the table
@@ -203,16 +207,14 @@ def run_stream_to_memory(
     if watermark is not None:
         stream = stream.withWatermark(*watermark)
     sink = f"stream_sink_{uuid.uuid4().hex[:8]}"
-    # state_partitions: a streaming query fixes its state-store partition
-    # count from shuffle.partitions AT START and pays one store commit
-    # per partition per side per batch — for joins whose per-key state is
-    # small, that fixed cost dominates locally (measured 3.8x on the
-    # stream-stream join at 32 vs 8). Opt-in knob; the conf is restored
-    # right after start so nothing else in the session sees it. On a
-    # cluster, size it to stream volume instead.
+    # A streaming query fixes its state-store count from shuffle.partitions
+    # AT START and commits every store on every batch; AQE never coalesces
+    # state. At the batch width (32) on a few cores those commits were most
+    # of a small stream's time (stream-stream join: 3.8x at 32 vs 8), so a
+    # stream starts with one store per core. The conf is restored right
+    # after start, so nothing else in the session sees it.
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    spark.conf.set("spark.sql.shuffle.partitions", str(default_parallelism(spark)))
     try:
         q = (
             transform(stream)
@@ -223,8 +225,7 @@ def run_stream_to_memory(
             .start()
         )
     finally:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
     q.awaitTermination()
     return spark.table(sink)
 
@@ -519,8 +520,7 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return run_stream_to_memory(
-        spark, sf_dir, join_views_purchases, output_mode="append",
-        state_partitions=8,
+        spark, sf_dir, join_views_purchases, output_mode="append"
     )
 
 

@@ -423,13 +423,10 @@ def streaming_contamination_screen(spark: SparkSession, sf_dir: str) -> DataFram
             .agg(F.count(F.lit(1)).alias("n_test_hits"))
         )
 
-    # per-doc counters are tiny state; at 32 partitions the per-batch
-    # store commits dominate the join locally (the stream-stream join
-    # lesson — state partitions are SIZED, not inherited)
     return run_stream_to_memory(
         spark, sf_dir, screen,
         output_mode="complete", watermark=None,
-        source_file="documents.parquet", state_partitions=8,
+        source_file="documents.parquet",
     )
 
 

@@ -54,7 +54,7 @@ def test_ann_ivf_high_recall_on_clustered(spark, clustered):
     e = clustered
     scored = (
         e.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .withColumn("cos_sim", F.round(cosine(F.col("q_emb"), F.col("embedding")), 6))
+        .withColumn("cos_sim", F.round(cosine("q_emb", "embedding"), 6))
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
     brute = (
@@ -167,7 +167,7 @@ def test_knn_graph_recall_on_clustered(spark, clustered):
     """On cluster-structured embeddings (the shape IVF assumes), the
     blocked graph recovers the brute-force top-1 for nearly every node."""
     from disco_spark.similarity.ann import knn_graph
-    from disco_spark.dedup.dedup import dot, norm
+    from disco_spark.dedup.dedup import cosine
     from pyspark.sql.window import Window as W
 
     by_src = {}
@@ -176,7 +176,7 @@ def test_knn_graph_recall_on_clustered(spark, clustered):
     a = clustered.select(F.col("vec_id").alias("src_id"), F.col("embedding").alias("qe"))
     b = clustered.select(F.col("vec_id").alias("dst_id"), F.col("embedding").alias("de"))
     pairs = a.join(b, F.col("src_id") != F.col("dst_id")).withColumn(
-        "cs", dot(F.col("qe"), F.col("de")) / (norm(F.col("qe")) * norm(F.col("de")))
+        "cs", cosine("qe", "de")
     )
     top1 = {
         r.src_id: r.dst_id
@@ -251,7 +251,7 @@ def test_adaptive_knn_recall_gate(spark):
 
     registry.load_all()
     e = load_tables(spark, SF_SMOKE)["embeddings"]
-    ed = e.withColumn("nrm", norm(F.col("embedding")))
+    ed = e.withColumn("nrm", norm("embedding"))
     a = ed.select(F.col("vec_id").alias("src_id"), F.col("embedding").alias("ea"),
                   F.col("nrm").alias("na"))
     b = ed.select(F.col("vec_id").alias("dst_id"), F.col("embedding").alias("eb"),
@@ -260,7 +260,7 @@ def test_adaptive_knn_recall_gate(spark):
         a.crossJoin(b)
         .filter(F.col("src_id") != F.col("dst_id"))
         .withColumn("cos_sim",
-                    F.round(dot(F.col("ea"), F.col("eb"))
+                    F.round(dot("ea", "eb")
                             / (F.col("na") * F.col("nb")), 6))
     )
     w = Window.partitionBy("src_id").orderBy(F.desc("cos_sim"), F.asc("dst_id"))

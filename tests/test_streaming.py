@@ -148,17 +148,18 @@ def test_incremental_dedup_replays_across_microbatches(spark, tmp_path):
         run_stream_to_memory,
     )
 
-    src = tmp_path / "landing"
-    src.mkdir()
-    shutil.copy(f"{SF_SMOKE}/documents.parquet", src / "documents_batch1.parquet")
-    shutil.copy(f"{SF_SMOKE}/documents.parquet", src / "documents_batch2.parquet")
+    # a directory-shaped documents table whose two part files are copies
+    src = tmp_path / "landing" / "documents.parquet"
+    src.mkdir(parents=True)
+    shutil.copy(f"{SF_SMOKE}/documents.parquet", src / "part-00000.parquet")
+    shutil.copy(f"{SF_SMOKE}/documents.parquet", src / "part-00001.parquet")
     out = run_stream_to_memory(
         spark,
-        str(src),
+        str(tmp_path / "landing"),
         _incremental_dedup_transform,
         output_mode="append",
         watermark=None,
-        source_file="documents_batch*.parquet",
+        source_file="documents.parquet",
         max_files_per_trigger=1,
     )
     emitted = [r.content_hash for r in out.collect()]
